@@ -2,6 +2,11 @@ package graft.ops
 
 import graft.ops.TrackedCache.TrackOps
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,13 +39,37 @@ object RelationalOps {
     * regime, where scans arrive in thousands of splits — this is the
     * identity and adds NOTHING to the plan. Deciding from the plan's
     * partition count keeps it scale-adaptive rather than a local-mode
-    * constant (ShufflePolicy discipline). */
+    * constant (ShufflePolicy discipline). The count is read from the
+    * physical plan ([[plannedPartitions]]), so the probe runs no job
+    * even when the input already contains an exchange. */
   def spreadNarrowInput(df: DataFrame, partitionCols: Seq[Column] = Nil): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val cur = df.queryExecution.toRdd.getNumPartitions // plan-time; runs no job
-    if (cur >= target) df
+    if (plannedPartitions(df) >= target) df
     else if (partitionCols.nonEmpty) df.repartition(target, partitionCols: _*)
     else df.repartition(target)
+  }
+
+  /** The number of partitions `df`'s compiled plan will produce, read
+    * from the plan without executing it. A known output partitioning
+    * (an exchange, a coalesce, a bucketed scan) gives its static count,
+    * before any AQE coalescing; otherwise the count flows up from the
+    * leaves, where a scan's RDD is built lazily from its split list.
+    * Broadcast build sides count as 0: the stream side sets the width.
+    * For a plan without an exchange this equals
+    * `queryExecution.toRdd.getNumPartitions`, which would instead make
+    * AQE run every upstream stage of a plan that has one. */
+  private[graft] def plannedPartitions(df: DataFrame): Int =
+    plannedPartitions(df.queryExecution.executedPlan)
+
+  private def plannedPartitions(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => plannedPartitions(a.executedPlan)
+    case m: InMemoryTableScanExec => plannedPartitions(m.relation.cachedPlan)
+    case _: BroadcastExchangeLike | _: BroadcastQueryStageExec => 0
+    case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+    case u: UnionExec => u.children.map(plannedPartitions).sum
+    case c: CartesianProductExec => plannedPartitions(c.left) * plannedPartitions(c.right)
+    case l: LeafExecNode => l.execute().getNumPartitions
+    case _ => p.children.map(plannedPartitions).max
   }
 
   /** A2 (`drop_duplicates(subset=keys)` keep-first) with an explicit
@@ -59,10 +88,13 @@ object RelationalOps {
   def keepLatest(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
     keepFirst(df, keys, order.map(_.desc))
 
-  /** A1 alternative without a window: single hash-aggregate carrying the
-    * whole row as `max(struct(orderCols ++ payload))`. Preferable at
-    * scale when the key cardinality is high (partial aggregation
-    * map-side combines before the shuffle; a window can't).
+  /** A1 alternative without a window: one aggregation carrying the
+    * whole row as `max(struct(orderCols ++ payload))`. A struct buffer
+    * with string fields cannot hash-aggregate, so Spark plans a
+    * `SortAggregate` with a sort on each side of the exchange; the
+    * partial aggregate still combines map-side before the shuffle,
+    * which a window cannot, so it is preferable at scale when the key
+    * cardinality is high.
     * Returns one struct column `m`; caller projects fields.
     */
   def latestByAgg(df: DataFrame, keys: Seq[String], orderCols: Seq[Column], payload: Seq[Column]): DataFrame =

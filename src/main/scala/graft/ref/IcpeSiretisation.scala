@@ -61,9 +61,15 @@ object IcpeSiretisation {
   /** Stage `enrich_installations` (`dags/icpe-siretisation.py:163-222`):
     * left join etablissements on codeS3ic (J1) + three dict-label columns
     * (F7). The etablissements side is the smaller dimension — broadcast
-    * so the installations fact never shuffles. */
+    * so the join itself adds no shuffle. A registry-sized CSV arrives in
+    * fewer splits than cores (`openCostInBytes` floors the split size),
+    * so a narrow fact is spread once, hash-partitioned on codeS3ic
+    * ([[RelationalOps.spreadNarrowInput]]; the identity on a wide
+    * input): every broadcast probe and the export write downstream then
+    * run core-wide, and broadcast joins keep that partitioning, so the
+    * `makeStats` keep-first window needs no exchange of its own. */
   def enrichInstallations(installations: DataFrame, etablissements: DataFrame): DataFrame =
-    installations
+    RelationalOps.spreadNarrowInput(installations, Seq(col("codeS3ic")))
       .join(broadcast(etablissements), Seq("codeS3ic"), "left")
       .withColumn("lib_seveso", RelationalOps.labelMap(col("seveso"), LibSeveso))
       .withColumn("famille_ic_libelle", RelationalOps.labelMap(col("familleIc"), FamilleIc))
@@ -142,8 +148,11 @@ object IcpeSiretisation {
     * typed result. Dedup by codeS3ic is keep-first in pandas' arbitrary
     * post-merge order; here it is deterministic — prefer a VALID siret,
     * then lexicographic min — so stats are stable under any partitioning.
-    * All three counters come from ONE aggregation pass (single shuffle),
-    * not three separate count() jobs like the reference's three scans.
+    * All three counters come from ONE aggregation job, not three
+    * separate count() jobs like the reference's three scans; its plan
+    * has the keep-first window's exchange on codeS3ic (satisfied by the
+    * `enrichInstallations` spread when there is one) plus the two
+    * exchanges of the `countDistinct` aggregation.
     */
   case class IcpeStats(nbInstallationsTd: Long, nbNoSiret: Long, nbSiretsUniques: Long) {
     def nbWithSiret: Long = nbInstallationsTd - nbNoSiret
@@ -159,17 +168,23 @@ object IcpeSiretisation {
   }
 
   def makeStats(installations: DataFrame, rubriquesEnriched: DataFrame): IcpeStats = {
+    val row = statsFrame(installations, rubriquesEnriched).collect()(0)
+    IcpeStats(row.getLong(0), row.getLong(1), row.getLong(2))
+  }
+
+  /** The one-row aggregation behind [[makeStats]]: keep-first per
+    * codeS3ic over the Trackdéchets installations, then the three
+    * counters (`nb_td`, `nb_no_siret`, `nb_sirets`). */
+  private[graft] def statsFrame(installations: DataFrame, rubriquesEnriched: DataFrame): DataFrame = {
     val td = trackdechetsInstallations(installationsRubriques(installations, rubriquesEnriched))
       .select("codeS3ic", "s3icNumeroSiret")
     val deduped = RelationalOps.keepFirst(td, Seq("codeS3ic"),
       Seq(RelationalOps.isValidId(col("s3icNumeroSiret")).desc, col("s3icNumeroSiret")))
     val invalid = length(col("s3icNumeroSiret")) < 14 || col("s3icNumeroSiret").isNull
-    val row = deduped.agg(
+    deduped.agg(
       count(lit(1)).as("nb_td"),
       count(when(invalid, 1)).as("nb_no_siret"),
       countDistinct(when(RelationalOps.isValidId(col("s3icNumeroSiret")), col("s3icNumeroSiret"))).as("nb_sirets"))
-      .collect()(0)
-    IcpeStats(row.getLong(0), row.getLong(1), row.getLong(2))
   }
 
   /** Full pipeline wiring (`dags/icpe-siretisation.py:400-409`): enrich,

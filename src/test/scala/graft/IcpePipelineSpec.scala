@@ -219,6 +219,46 @@ class IcpePipelineSpec extends SparkSpec {
     s.nbSiretsUniques shouldBe 1     // only 0001's
   }
 
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** Shuffle exchanges below the keep-first window of `makeStats`,
+    * hash-partitioned on codeS3ic. */
+  private def codeS3icExchangesBelowWindow(inst: DataFrame) = {
+    val plan = IcpeSiretisation.statsFrame(inst, rubEnriched).queryExecution.executedPlan
+    val windows = planHelper.collect(plan) { case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    windows.length shouldBe 1
+    planHelper.collect(windows.head) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike if (e.outputPartitioning match {
+          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+            h.expressions.flatMap(_.references.map(_.name)) == Seq("codeS3ic")
+          case _ => false
+        }) => e
+    }
+  }
+
+  test("makeStats: the narrow fixture's one spread exchange on codeS3ic also serves the window") {
+    // the fixture is one CSV split on a multi-core session: narrow
+    val ex = codeS3icExchangesBelowWindow(enrichedInst)
+    ex.length shouldBe 1
+    ex.head.shuffleOrigin shouldBe org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    ex.head.numPartitions shouldBe spark.sparkContext.defaultParallelism
+    codeS3icExchangesBelowWindow(
+      IcpeSiretisation.enrichInstallations(installations, etablissements)).length shouldBe 1
+  }
+
+  test("makeStats on pre-widened installations: same golden stats, no spread exchange") {
+    val cores = spark.sparkContext.defaultParallelism
+    val wide = installations.repartition(cores)
+    RelationalOps.spreadNarrowInput(wide, Seq(col("codeS3ic"))) should be theSameInstanceAs wide
+    val enriched = IcpeSiretisation.enrichedInstallations(wide, etablissements, gerep, company)
+    val ex = codeS3icExchangesBelowWindow(enriched)
+    ex.length shouldBe 1 // the window's own exchange
+    ex.head.shuffleOrigin shouldBe org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS
+    IcpeSiretisation.makeStats(enriched, rubEnriched) shouldBe IcpeSiretisation.IcpeStats(3, 0, 3)
+    IcpeSiretisation.makeStats(IcpeSiretisation.enrichInstallations(wide, etablissements),
+      rubEnriched) shouldBe IcpeSiretisation.IcpeStats(3, 2, 1)
+  }
+
   test("publish-open-data: P7+P3 collapse, array-literal match, J5 flag") {
     import spark.implicits._
     val company = Seq(

@@ -390,4 +390,83 @@ class RelationalOpsSpec extends SparkSpec {
     // null run must see NULL (its lead is null), not skip to row 29's value
     got.find(_._1 == 14L).get._2 shouldBe None
   }
+
+  // --- spreadNarrowInput: the r16 narrow-input guard ------------------
+
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+  private def shuffles(df: org.apache.spark.sql.DataFrame) =
+    planHelper.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+    }
+
+  /** Jobs submitted while `body` runs, counted by a listener. */
+  private def jobsDuring[T](body: => T): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftSparkShim.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftSparkShim.drainListenerBus(sc); jobs.get }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("spreadNarrowInput: a narrow input gets one hash exchange on the keys, core-wide") {
+    val cores = spark.sparkContext.defaultParallelism
+    cores should be > 1
+    val narrow = spark.range(0, 1000, 1, 1).withColumn("k", col("id") % 7)
+    val spread = RelationalOps.spreadNarrowInput(narrow, Seq(col("k")))
+    val ex = shuffles(spread)
+    ex.length shouldBe 1
+    ex.head.shuffleOrigin shouldBe org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    ex.head.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.numPartitions shouldBe cores
+        h.expressions.flatMap(_.references.map(_.name)) shouldBe Seq("k")
+      case other => fail(s"expected hash partitioning on k, got $other")
+    }
+    spread.queryExecution.toRdd.getNumPartitions shouldBe cores
+    spread.count() shouldBe 1000L
+  }
+
+  test("spreadNarrowInput: an input already core-wide comes back as the same frame") {
+    val cores = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0, 1000, 1, cores * 2).withColumn("k", col("id") % 7)
+    RelationalOps.spreadNarrowInput(wide, Seq(col("k"))) should be theSameInstanceAs wide
+    RelationalOps.spreadNarrowInput(wide) should be theSameInstanceAs wide
+  }
+
+  test("spreadNarrowInput: probing a frame that contains an exchange submits no job") {
+    val base = spark.range(0, 1000, 1, 1).withColumn("k", col("id") % 7)
+    val grouped = base.groupBy("k").agg(count(lit(1)).as("n"))
+    val joined = base.join(broadcast(spark.range(0, 7).withColumnRenamed("id", "k")), Seq("k"))
+    jobsDuring(RelationalOps.spreadNarrowInput(grouped, Seq(col("k")))) shouldBe 0
+    jobsDuring(RelationalOps.spreadNarrowInput(joined, Seq(col("k")))) shouldBe 0
+    // the listener does see jobs: executing the same frame submits some
+    jobsDuring(joined.count()) should be > 0
+  }
+
+  test("plannedPartitions equals the compiled RDD's count on frames without an exchange") {
+    val frames = Seq(
+      spark.range(0, 100, 1, 1).toDF(),
+      spark.range(0, 100, 1, 9).where(col("id") > 3).toDF(),
+      Seq(1, 2).toDF("v"),
+      spark.read.parquet(s"$sf0001/documents.parquet").select("doc_id"),
+      spark.read.parquet(s"$sf0001/lineitem.parquet").select("l_orderkey")
+        .union(spark.read.parquet(s"$sf0001/orders.parquet").select("o_orderkey")))
+    def same(df: org.apache.spark.sql.DataFrame): Unit = {
+      shuffles(df) shouldBe empty
+      RelationalOps.plannedPartitions(df) shouldBe df.queryExecution.toRdd.getNumPartitions
+    }
+    frames.foreach(same)
+    // an unbroadcast cross join is a cartesian product: one partition per pair
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val cross = spark.range(0, 10, 1, 2).crossJoin(spark.range(0, 10, 1, 3).withColumnRenamed("id", "j"))
+      cross.queryExecution.executedPlan.toString should include("CartesianProduct")
+      same(cross)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 }
